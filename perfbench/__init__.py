@@ -1,0 +1,1 @@
+"""Benchmark for the gdal_spark engine: see README.md."""

@@ -1,0 +1,20 @@
+import os
+import sys
+
+import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, ROOT)
+
+
+@pytest.fixture(scope="session")
+def spark():
+    from perfbench import run
+
+    run._spark_env()
+    from gdal_spark.session import get_spark
+
+    s = get_spark("perfbench-tests", cores=2, shuffle_partitions=2)
+    s.sparkContext.setLogLevel("ERROR")
+    yield s
+    run._stop(s)
