@@ -1,9 +1,8 @@
 """Column-level spatial functions (pure Catalyst, JVM-side).
 
-Cell encoding and Hilbert keys are the per-row hot path of every
-spatial join at 10^12-doc scale, so they are expressed as Column
-arithmetic — whole-stage-codegen'd by Tungsten, never touching
-Python.  The numpy twins in gdal_spark.kernels are the oracle;
+Cell encoding and the point-in-polygon fold are the per-row hot path
+of every spatial join at 10^12-doc scale, so they are expressed as
+Column expressions — evaluated in the JVM, never touching Python.  The numpy twins in gdal_spark.kernels are the oracle;
 tests assert bit-equality between the two.
 """
 
@@ -14,7 +13,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..kernels.cells import TileGrid, X_SHIFT, Z_SHIFT
-from ..kernels.hilbert import HILBERT_MAX
 
 
 def tile_xy_cols(grid: TileGrid, z: int, x: Column, y: Column):
@@ -61,71 +59,6 @@ def parent_cell_col(cell: Column) -> Column:
                          F.shiftrightunsigned(cell_y_col(cell), 1))
 
 
-def _u32(c: Column) -> Column:
-    return c.bitwiseAND(F.lit(0xFFFFFFFF))
-
-
-def hilbert_u32_col(x: Column, y: Column) -> Column:
-    """Column twin of kernels.hilbert.hilbert_u32 (16-bit inputs).
-
-    Same bit algebra as packedrtree.cpp:74-131, on longs (all
-    intermediates < 2^32 given 16-bit inputs, so no wraparound
-    masking is needed beyond the final combine).
-    """
-    M = F.lit(0xFFFF)
-    x = x.cast("long")
-    y = y.cast("long")
-
-    a = x.bitwiseXOR(y)
-    b = M.bitwiseXOR(a)
-    c = M.bitwiseXOR(x.bitwiseOR(y))
-    d = x.bitwiseAND(y.bitwiseXOR(M))
-
-    def sr(col, n):
-        return F.shiftrightunsigned(col, n)
-
-    A = a.bitwiseOR(sr(b, 1))
-    B = sr(a, 1).bitwiseXOR(a)
-    C = sr(c, 1).bitwiseXOR(b.bitwiseAND(sr(d, 1))).bitwiseXOR(c)
-    D = a.bitwiseAND(sr(c, 1)).bitwiseXOR(sr(d, 1)).bitwiseXOR(d)
-
-    a, b, c, d = A, B, C, D
-    A = a.bitwiseAND(sr(a, 2)).bitwiseXOR(b.bitwiseAND(sr(b, 2)))
-    B = a.bitwiseAND(sr(b, 2)).bitwiseXOR(b.bitwiseAND(sr(a.bitwiseXOR(b), 2)))
-    C = c.bitwiseXOR(a.bitwiseAND(sr(c, 2)).bitwiseXOR(b.bitwiseAND(sr(d, 2))))
-    D = d.bitwiseXOR(b.bitwiseAND(sr(c, 2)).bitwiseXOR(
-        a.bitwiseXOR(b).bitwiseAND(sr(d, 2))))
-
-    a, b, c, d = A, B, C, D
-    A = a.bitwiseAND(sr(a, 4)).bitwiseXOR(b.bitwiseAND(sr(b, 4)))
-    B = a.bitwiseAND(sr(b, 4)).bitwiseXOR(b.bitwiseAND(sr(a.bitwiseXOR(b), 4)))
-    C = c.bitwiseXOR(a.bitwiseAND(sr(c, 4)).bitwiseXOR(b.bitwiseAND(sr(d, 4))))
-    D = d.bitwiseXOR(b.bitwiseAND(sr(c, 4)).bitwiseXOR(
-        a.bitwiseXOR(b).bitwiseAND(sr(d, 4))))
-
-    a, b, c, d = A, B, C, D
-    C = c.bitwiseXOR(a.bitwiseAND(sr(c, 8)).bitwiseXOR(b.bitwiseAND(sr(d, 8))))
-    D = d.bitwiseXOR(b.bitwiseAND(sr(c, 8)).bitwiseXOR(
-        a.bitwiseXOR(b).bitwiseAND(sr(d, 8))))
-
-    a = C.bitwiseXOR(sr(C, 1))
-    b = D.bitwiseXOR(sr(D, 1))
-
-    i0 = x.bitwiseXOR(y)
-    i1 = b.bitwiseOR(M.bitwiseXOR(i0.bitwiseOR(a)))
-
-    def interleave(i):
-        i = _u32(i.bitwiseOR(F.shiftleft(i, 8))).bitwiseAND(F.lit(0x00FF00FF))
-        i = _u32(i.bitwiseOR(F.shiftleft(i, 4))).bitwiseAND(F.lit(0x0F0F0F0F))
-        i = _u32(i.bitwiseOR(F.shiftleft(i, 2))).bitwiseAND(F.lit(0x33333333))
-        i = _u32(i.bitwiseOR(F.shiftleft(i, 1))).bitwiseAND(F.lit(0x55555555))
-        return i
-
-    i0 = interleave(i0)
-    i1 = interleave(i1)
-    return _u32(F.shiftleft(i1, 1).bitwiseOR(i0))
-
-
 def pip_inside_col(edges: Column, x: Column, y: Column) -> Column:
     """JVM ray-cast point-in-polygon over an edges array column.
 
@@ -133,9 +66,15 @@ def pip_inside_col(edges: Column, x: Column, y: Column) -> Column:
     (vertex i+1, vertex i) pairing of OGRLinearRing::isPointInRing
     (ogrlinearring.cpp:498-517).  Exactly the kernel arithmetic —
     relative coords, strict/inclusive straddle split, intersection
-    strictly > 0 — but folded inside Catalyst with aggregate(), so
-    the exact phase of the spatial join stays in whole-stage codegen:
-    no Python, no Arrow hop, same IEEE doubles as the numpy kernel.
+    strictly > 0 — but counted inside Catalyst, so the exact phase of
+    the spatial join stays JVM-side: no Python, no Arrow hop, same
+    IEEE doubles as the numpy kernel.
+
+    The count is ``size(filter(...))``, not an ``aggregate()`` fold:
+    the optimizer infers a constraint from an ``aggregate()`` that
+    captures x and y and copies it onto the edge side of the join,
+    where those columns do not exist (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND
+    on points built by ``spark.range``).
     """
     def crossing(e):
         y1 = e["ey1"] - y
@@ -144,22 +83,18 @@ def pip_inside_col(edges: Column, x: Column, y: Column) -> Column:
         x2 = e["ex2"] - x
         straddle = ((y1 > 0) & (y2 <= 0)) | ((y2 > 0) & (y1 <= 0))
         inter = (x1 * y2 - x2 * y1) / (y2 - y1)
-        return F.when(straddle & (inter > 0.0), F.lit(1)).otherwise(F.lit(0))
+        return straddle & (inter > 0.0)
 
-    crossings = F.aggregate(
-        edges, F.lit(0), lambda acc, e: acc + crossing(e))
-    return crossings % 2 == 1
+    return F.size(F.filter(edges, crossing)) % 2 == 1
 
 
 def hilbert_u32_pandas(x: Column, y: Column) -> Column:
     """Arrow-vectorized Hilbert key (numpy kernel inside a pandas UDF).
 
-    The Column twin above is pure Catalyst but its expression DAG
-    re-expands into an exponentially large codegen tree (each round
-    references the previous round's four subexpressions 2-3 times),
-    so for bulk encoding the vectorized kernel is the fast path:
-    linear work per Arrow batch, bit-identical output
-    (tests assert equality of the two).
+    A Column expression of the same bit algebra re-expands into an
+    exponentially large codegen tree (each round references the
+    previous round's four subexpressions 2-3 times), so the key is
+    computed by the kernel: linear work per Arrow batch.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -171,22 +106,6 @@ def hilbert_u32_pandas(x: Column, y: Column) -> Column:
         return pd.Series(out.astype("int64"))
 
     return _h(x, y)
-
-
-def hilbert_key_col(px: Column, py: Column, minx: float, miny: float,
-                    width: float, height: float) -> Column:
-    """Column twin of kernels.hilbert.hilbert_of_xy_f64: world point ->
-    uint32 Hilbert key over a fixed extent.  Use as the
-    repartitionByRange key for spatial locality (north_rule)."""
-    if width != 0.0:
-        gx = F.floor(F.lit(float(HILBERT_MAX)) * (px - F.lit(minx)) / F.lit(width))
-    else:
-        gx = F.lit(0)
-    if height != 0.0:
-        gy = F.floor(F.lit(float(HILBERT_MAX)) * (py - F.lit(miny)) / F.lit(height))
-    else:
-        gy = F.lit(0)
-    return hilbert_u32_col(gx.cast("long"), gy.cast("long"))
 
 
 def covering_cells_col(grid: TileGrid, z: int,

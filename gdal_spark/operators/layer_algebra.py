@@ -7,7 +7,7 @@ Semantics follow OGRLayer's layer-algebra methods
 :5148, Clip :5497, Erase :5806).  For a POINT method layer the
 geometric kernel degenerates to containment, so every operation is a
 composition of the engine's two-phase spatial join — the coarse cell
-equi-join + exact JVM ray cast — plus semi/anti joins:
+equi-join + exact JVM ray cast — and its first-match and left modes:
 
   Intersection(P, Q) = points in >=1 polygon, attrs combined
   Clip(P, Q)         = points in >=1 polygon, P attrs only (dedup)
@@ -58,18 +58,17 @@ def intersection(points: DataFrame, polys: DataFrame, grid: TileGrid,
 def clip(points: DataFrame, polys: DataFrame, grid: TileGrid,
          zoom: int = 6) -> DataFrame:
     """Input features cut to the method layer's area: point subset,
-    input attributes only (ogrlayer.cpp:5497)."""
-    key = points.columns[0]
-    hit = _matches(points, polys, grid, zoom).select(key).distinct()
-    return points.join(hit, key, "left_semi")
+    input attributes only (ogrlayer.cpp:5497) — each point row once."""
+    return spatial_join(points, polys, grid, zoom=zoom,
+                        first_match=True).select(*points.columns)
 
 
 def erase(points: DataFrame, polys: DataFrame, grid: TileGrid,
           zoom: int = 6) -> DataFrame:
-    """Input minus the method layer's area (ogrlayer.cpp:5806)."""
-    key = points.columns[0]
-    hit = _matches(points, polys, grid, zoom).select(key).distinct()
-    return points.join(hit, key, "left_anti")
+    """Input minus the method layer's area (ogrlayer.cpp:5806): the
+    left-join rows that found no polygon."""
+    return spatial_join(points, polys, grid, zoom=zoom, how="left").filter(
+        F.col("fid").isNull()).select(*points.columns)
 
 
 def identity(points: DataFrame, polys: DataFrame, grid: TileGrid,

@@ -1,25 +1,28 @@
 """Two-phase cell-indexed spatial join (the engine's flagship operator).
 
 Reproduces the reference's two-phase spatial filter — bbox reject,
-bbox-inside accept, exact test
-(/root/reference/ogr/ogrsf_frmts/generic/ogrlayer.cpp:2253-2325) —
-as a distributed plan:
+then exact test (ogrlayer.cpp:2253-2325) — as one distributed plan,
+written once in ``_two_phase`` and shared by every key scheme:
 
-  phase 1 (coarse, pure Catalyst):
-      points -> cell id (Column math, JVM-side);
-      polygons -> covering cell set (sequence + explode, JVM-side);
-      equi-join on cell — broadcast when the polygon side is small,
-      else shuffle with explicit hot-cell salting (north_rule), on
-      top of AQE's skew handling;
-      envelope pretest as a Column predicate (pushdown-friendly).
+  phase 1 (candidates, pure Catalyst):
+      points -> cell key, polygons -> covering cells.  Quadtree keys
+      are Column math (``spatial_join``, also the streaming join); S2
+      keys come from the Arrow kernel and the bbox coverer
+      (``spatial_join_s2``).  Equi-join on cell — broadcast when the
+      polygon side is small, else shuffle with explicit hot-cell
+      salting (north_rule) on top of AQE's skew handling — then the
+      envelope pretest as a Column predicate.
 
-  phase 2 (exact, Arrow-vectorized):
-      ray-cast PIP in numpy inside mapInPandas — bit-identical to
-      OGRLinearRing::isPointInRing (ogrlinearring.cpp:462-532).
+  phase 2 (exact, JVM):
+      ray-cast PIP as a Catalyst fold over the polygon's edge array
+      (functions.pip_inside_col), bit-identical to
+      OGRLinearRing::isPointInRing (ogrlinearring.cpp:462-532) and to
+      kernels/pip.py.  The only Python stage is the edge-table build,
+      which ``prepare_edges`` runs once per layer.
 
-Matching GDAL's index-nested-loop (SetSpatialFilter per feature,
-ogrlayer.cpp:3345) result set with a shuffle plan that survives
-10^12 rows.
+Polygon attributes re-join by fid.  ``first_match`` and ``how="left"``
+key on a row id assigned once per input point, so, like GDAL's filter,
+the result does not depend on the shape of the point frame.
 """
 
 from __future__ import annotations
@@ -32,7 +35,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import functions as gf
 from ..kernels.cells import TileGrid
-from ..kernels import pip as kpip
 from ..kernels import wkb as kwkb
 
 DEFAULT_ZOOM = 12
@@ -109,25 +111,97 @@ def prepare_edges(polys: DataFrame) -> DataFrame:
     return edges_table(polys).persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def _exact_pip_cogroup(cand_pdf: pd.DataFrame,
-                       poly_pdf: pd.DataFrame) -> pd.DataFrame:
-    """Cogrouped-by-fid exact phase: decode this fid's WKB once, test
-    all its candidate points vectorized."""
-    if len(cand_pdf) == 0 or len(poly_pdf) == 0:
-        return cand_pdf.iloc[0:0]
-    rings = kwkb.polygon_rings(bytes(poly_pdf["wkb"].iloc[0]))
-    xs = cand_pdf["x"].to_numpy(dtype=np.float64)
-    ys = cand_pdf["y"].to_numpy(dtype=np.float64)
-    # envelope already pretested in phase 1 -> straight to the kernel
-    return cand_pdf[kpip.points_in_polygon(xs, ys, rings)]
+_BBOX = ("xmin", "ymin", "xmax", "ymax")
+
+
+def _two_phase(pts: DataFrame, pcells: DataFrame, polys: DataFrame,
+               how: str, broadcast: bool | None, salt: int | str,
+               first_match: bool, edges: DataFrame | None) -> DataFrame:
+    """The refine core every key scheme shares.
+
+    pts    : points with double x, y and a ``cell`` key
+    pcells : (cell, fid, xmin, ymin, xmax, ymax) covering table in the
+             same key space
+
+    The cell key only generates candidates; the envelope pretest and
+    the exact fold decide, so quadtree and S2 callers get the same
+    result.  Arguments are ``spatial_join``'s.  ``first_match`` and ``how="left"`` key on a row
+    id assigned once per input point, so they hold for any point-frame
+    shape (no key column, duplicate rows, non-unique leading column).
+    In the left mode the point rows never leave the plan: a point whose
+    candidates all fail keeps one row with null polygon columns.
+    """
+    keep_all = how == "left"
+    if salt == "auto":
+        # hot-cell diagnostic on the POINT side drives the salt factor
+        # (north_rule: explicit salting for coastline/metro hot cells)
+        from .partitioning import choose_salt
+
+        salt = choose_salt(pts, "cell")
+    if first_match or keep_all:
+        pts = pts.withColumn("_rid", F.monotonically_increasing_id())
+
+    keys = ["cell"]
+    if salt and salt > 1:
+        pts = pts.withColumn("_salt", F.pmod(F.xxhash64(F.col("x"), F.col("y")),
+                                             F.lit(salt)).cast("int"))
+        pcells = pcells.withColumn("_salt", F.explode(
+            F.sequence(F.lit(0), F.lit(salt - 1)))).withColumn(
+            "_salt", F.col("_salt").cast("int"))
+        keys.append("_salt")
+
+    if broadcast is True:
+        right = F.broadcast(pcells)
+    elif broadcast is False:
+        right = pcells.hint("shuffle_hash")
+    else:
+        # Catalyst's size estimate picks broadcast for a small dim; AQE
+        # converts sort-merge -> broadcast at runtime otherwise.  No
+        # driver-side count per call.
+        right = pcells
+    if edges is None:
+        edges = edges_table(polys)
+    edges = F.broadcast(edges) if broadcast is not False else edges
+
+    x, y = F.col("x"), F.col("y")
+    envelope = ((x >= F.col("xmin")) & (x <= F.col("xmax"))
+                & (y >= F.col("ymin")) & (y <= F.col("ymax")))
+    inside = gf.pip_inside_col(F.col("edges"), x, y)
+    jt = "left" if keep_all else "inner"
+    cand = pts.join(right, keys, jt).drop("_salt")
+    if keep_all:
+        # both phases become a flag so unmatched points stay in the plan
+        cand = cand.join(edges, "fid", jt).withColumn(
+            "_hit", F.coalesce(envelope & inside, F.lit(False)))
+    else:
+        cand = cand.filter(envelope).join(edges, "fid", jt).filter(inside)
+    matched = cand.drop("edges", "cell", *_BBOX)
+
+    if first_match or keep_all:
+        from pyspark.sql.window import Window
+
+        hit = F.col("_hit") if keep_all else F.lit(True)
+        order = [hit.desc(), F.col("fid")] if keep_all else [F.col("fid")]
+        rn = F.row_number().over(Window.partitionBy("_rid").orderBy(*order))
+        keep = F.col("_rn") == 1
+        if not first_match:
+            keep = keep | hit
+        matched = matched.withColumn("_rn", rn).filter(keep)
+        if keep_all:
+            matched = matched.withColumn("fid", F.when(hit, F.col("fid")))
+        matched = matched.drop("_rn", "_rid", "_hit")
+
+    # re-attach full polygon attributes (cheap broadcast by fid)
+    attrs = polys.drop("wkb", *_BBOX)
+    return matched.join(F.broadcast(attrs), "fid", jt)
 
 
 def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
                  zoom: int = DEFAULT_ZOOM, how: str = "inner",
                  broadcast: bool | None = None, salt: int | str = 0,
-                 first_match: bool = False, exact: str = "column",
+                 first_match: bool = False,
                  edges: DataFrame | None = None) -> DataFrame:
-    """Join point rows to containing polygons.
+    """Join point rows to containing polygons, keyed on quadtree cells.
 
     points : any DF with double columns x, y (see extract_geo_points)
     polys  : DF with fid bigint, wkb binary, xmin/ymin/xmax/ymax double
@@ -138,107 +212,18 @@ def spatial_join(points: DataFrame, polys: DataFrame, grid: TileGrid,
              statistics + AQE runtime re-planning (no extra driver
              action — a count here would serialize every call)
     salt   : replicate the polygon index `salt` ways and scatter
-             points by a doc hash — explicit hot-cell skew remedy on
-             top of AQE (north_rule).  0/1 = unsalted.
-    first_match : emit at most one polygon per point (lowest fid) —
+             points by a point hash — explicit hot-cell skew remedy on
+             top of AQE (north_rule).  0/1 = unsalted, 'auto' = chosen
+             from the point-side cell histogram.
+    first_match : emit at most one polygon per point row (lowest fid) —
              OGR SQL join cardinality (ogr_gensql.cpp:1497-1527).
     edges  : pre-built edge table from ``prepare_edges(polys)`` —
              reuses one persisted edge build across repeated joins on
              the same layer instead of a fresh Python stage per call.
     """
     pts = points.withColumn("cell", gf.cell_col(grid, zoom, F.col("x"), F.col("y")))
-
-    pcells = polygon_cells(polys, grid, zoom).select(
-        "cell", "fid", "xmin", "ymin", "xmax", "ymax")
-
-    if salt == "auto":
-        # hot-cell diagnostic on the POINT side drives the salt factor
-        # (north_rule: explicit salting for coastline/metro hot cells)
-        from .partitioning import choose_salt
-
-        salt = choose_salt(pts, "cell")
-
-    if salt and salt > 1:
-        pts = pts.withColumn("_salt", F.pmod(F.xxhash64(F.col("x"), F.col("y")),
-                                             F.lit(salt)).cast("int"))
-        pcells = pcells.withColumn("_salt", F.explode(
-            F.sequence(F.lit(0), F.lit(salt - 1)))).withColumn(
-            "_salt", F.col("_salt").cast("int"))
-        join_keys = ["cell", "_salt"]
-    else:
-        join_keys = ["cell"]
-
-    if broadcast is True:
-        right = F.broadcast(pcells)
-    elif broadcast is False:
-        right = pcells.hint("shuffle_hash")
-    else:
-        # Catalyst's parquet-stat size estimate picks broadcast for a
-        # small dim; AQE converts sort-merge -> broadcast at runtime
-        # otherwise.  No driver-side count per call.
-        right = pcells
-
-    cand = pts.join(right, join_keys, "inner")
-    # envelope pretest (phase 1b) as Column predicates
-    cand = cand.filter(
-        (F.col("x") >= F.col("xmin")) & (F.col("x") <= F.col("xmax"))
-        & (F.col("y") >= F.col("ymin")) & (F.col("y") <= F.col("ymax")))
-
-    cand = cand.drop("_salt") if (salt and salt > 1) else cand
-
-    # phase 2: exact ray-cast — JVM aggregate() fold by default (stays
-    # in whole-stage codegen; ~10x the Arrow-UDF path and no Python
-    # workers at all); cogrouped pandas kernel path for bit-match demos
-    if exact == "column":
-        if edges is None:
-            edges = edges_table(polys)
-        edges = F.broadcast(edges) if broadcast is not False else edges
-        cand = cand.join(edges, "fid", "inner")
-        matched = cand.filter(
-            gf.pip_inside_col(F.col("edges"), F.col("x"), F.col("y"))
-        ).drop("edges")
-    else:
-        # cogroup on (fid, point-hash split): the polygon side is
-        # replicated NSPLIT ways so one hot polygon's candidates
-        # spread over NSPLIT tasks instead of funneling into one
-        nsplit = 32
-        candg = cand.withColumn(
-            "_g", F.pmod(F.xxhash64("x", "y"), F.lit(nsplit)).cast("int"))
-        # rename the poly-side key: cand already carries polys lineage
-        # (via pcells), and cogroup keys match positionally anyway
-        polysg = polys.select(F.col("fid").alias("_pfid"), "wkb").withColumn(
-            "_g", F.explode(F.sequence(F.lit(0), F.lit(nsplit - 1))))
-        polysg = polysg.withColumn("_g", F.col("_g").cast("int"))
-        matched = (
-            candg.groupBy("fid", "_g")
-            .cogroup(polysg.groupBy("_pfid", "_g"))
-            .applyInPandas(
-                lambda left, right: _exact_pip_cogroup(left, right),
-                candg.schema)
-        ).drop("_g")
-
-    drop_cols = ["cell", "xmin", "ymin", "xmax", "ymax"]
-    matched = matched.drop(*drop_cols)
-
-    # re-attach full polygon attributes (cheap broadcast by fid)
-    attrs = polys.drop("wkb")
-    attrs = attrs.drop(*[c for c in ("xmin", "ymin", "xmax", "ymax")
-                         if c in attrs.columns])
-    matched = matched.join(F.broadcast(attrs), "fid", "inner")
-
-    if first_match:
-        from pyspark.sql.window import Window
-        pt_key = [c for c in points.columns if c not in ("x", "y", "spans")]
-        w = Window.partitionBy(*pt_key).orderBy(F.col("fid").asc())
-        matched = (matched.withColumn("_rn", F.row_number().over(w))
-                   .filter(F.col("_rn") == 1).drop("_rn"))
-
-    if how == "left":
-        pt_cols = [c for c in points.columns]
-        unmatched = points.join(matched.select(*pt_cols).distinct(),
-                                pt_cols[0:1], "left_anti")
-        matched = matched.unionByName(unmatched, allowMissingColumns=True)
-    return matched
+    pcells = polygon_cells(polys, grid, zoom).select("cell", "fid", *_BBOX)
+    return _two_phase(pts, pcells, polys, how, broadcast, salt, first_match, edges)
 
 
 def spatial_join_s2(points: DataFrame, polys: DataFrame,
@@ -246,17 +231,15 @@ def spatial_join_s2(points: DataFrame, polys: DataFrame,
                     broadcast: bool | None = None,
                     first_match: bool = False,
                     edges: DataFrame | None = None) -> DataFrame:
-    """S2-keyed variant of the two-phase spatial join (the north
-    star's "H3/S2 cell" join path; the quadtree ``spatial_join`` is
-    the planar twin — results must be identical, asserted by the
-    pip_join_s2 oracle and tests).
+    """S2-keyed variant of ``spatial_join`` (the north star's "H3/S2
+    cell" join path) — results are identical to the quadtree join,
+    asserted by the pip_join_s2 oracle and tests.
 
-    Phase 1 keys both sides on level-``level`` S2 cells: points via
-    the Arrow pandas UDF (kernels/s2.py, one key per point), polygons
-    via the bbox coverer (overcovering candidate set; undercoverage
-    bounded by the coverer's dilation rule).  Phase 1b/2 are the SAME
-    envelope pretest + JVM ray-cast edge fold as spatial_join, so the
-    exact semantics are shared, not re-implemented.
+    Points take their level-``level`` S2 cell from the Arrow pandas
+    UDF (kernels/s2.py, one key per point); polygons take the cells of
+    the bbox coverer (an overcovering candidate set; undercoverage is
+    bounded by the coverer's dilation rule).  The envelope pretest and
+    exact phase are the shared core's.
 
     points: DF with lon/lat degree columns named x, y.
     polys:  DF(fid, wkb, xmin/ymin/xmax/ymax) in the same lon/lat CRS.
@@ -264,57 +247,19 @@ def spatial_join_s2(points: DataFrame, polys: DataFrame,
     from ..kernels import s2 as ks2
 
     pts = points.withColumn(
-        "_c", gf.s2_cell_pandas_key(F.col("x"), F.col("y"), level)
-    ).withColumnRenamed("_c", "cell")
+        "cell", gf.s2_cell_pandas_key(F.col("x"), F.col("y"), level))
 
-    def _cover(batches):
+    def _cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = {"cell": [], "fid": [], "xmin": [], "ymin": [],
-                    "xmax": [], "ymax": []}
-            for _, r in pdf.iterrows():
-                keys = ks2.cover_bbox_lonlat(
-                    r["xmin"], r["ymin"], r["xmax"], r["ymax"], level)
-                for kk in keys:
-                    rows["cell"].append(int(kk))
-                    rows["fid"].append(int(r["fid"]))
-                    for c in ("xmin", "ymin", "xmax", "ymax"):
-                        rows[c].append(float(r[c]))
-            yield pd.DataFrame(rows)
+            bbox = [pdf[c].to_numpy(dtype=np.float64) for c in _BBOX]
+            covers = [ks2.cover_bbox_lonlat(*b, level) for b in zip(*bbox)]
+            counts = [len(c) for c in covers]
+            out = {"cell": np.concatenate([np.empty(0, np.int64), *covers]),
+                   "fid": np.repeat(pdf["fid"].to_numpy(dtype=np.int64), counts)}
+            out.update({c: np.repeat(v, counts) for c, v in zip(_BBOX, bbox)})
+            yield pd.DataFrame(out)
 
-    pcells = polys.select("fid", "xmin", "ymin", "xmax", "ymax") \
-        .mapInPandas(_cover, "cell long, fid long, xmin double, "
-                             "ymin double, xmax double, ymax double")
-
-    right = F.broadcast(pcells) if broadcast is True else pcells
-    cand = pts.join(right, "cell", "inner").filter(
-        (F.col("x") >= F.col("xmin")) & (F.col("x") <= F.col("xmax"))
-        & (F.col("y") >= F.col("ymin")) & (F.col("y") <= F.col("ymax")))
-
-    if edges is None:
-        edges = edges_table(polys)
-    edges_b = F.broadcast(edges) if broadcast is not False else edges
-    matched = (cand.join(edges_b, "fid", "inner")
-               .filter(gf.pip_inside_col(F.col("edges"),
-                                         F.col("x"), F.col("y")))
-               .drop("edges", "cell", "xmin", "ymin", "xmax", "ymax"))
-    # distinct candidate (point, fid) pairs can repeat only if a point
-    # bbox-matched one polygon through two covering cells -> impossible
-    # (a point has exactly ONE cell key), so no dedup needed.
-
-    attrs = polys.drop("wkb")
-    attrs = attrs.drop(*[c for c in ("xmin", "ymin", "xmax", "ymax")
-                         if c in attrs.columns])
-    matched = matched.join(F.broadcast(attrs), "fid", "inner")
-
-    if first_match:
-        from pyspark.sql.window import Window
-        pt_key = [c for c in points.columns if c not in ("x", "y", "spans")]
-        w = Window.partitionBy(*pt_key).orderBy(F.col("fid").asc())
-        matched = (matched.withColumn("_rn", F.row_number().over(w))
-                   .filter(F.col("_rn") == 1).drop("_rn"))
-    if how == "left":
-        keep = points.join(
-            matched.select(*points.columns).distinct(),
-            points.columns, "left_anti")
-        matched = matched.unionByName(keep, allowMissingColumns=True)
-    return matched
+    pcells = polys.select("fid", *_BBOX).mapInPandas(
+        _cover, "cell long, fid long, xmin double, ymin double, "
+                "xmax double, ymax double")
+    return _two_phase(pts, pcells, polys, how, broadcast, 0, first_match, edges)

@@ -8,10 +8,10 @@ Rules used here:
   (exact in int64) followed by one double divide / multiply / add —
   the same IEEE-754 op sequence in both engines;
 * all constants are embedded via Python ``repr`` (round-trip exact);
-* the Hilbert bit-algebra (packedrtree.cpp:74-131) is emitted twice
-  from the same op list: once as Column expressions
-  (gdal_spark.functions.hilbert_u32_col), once as a DuckDB CTE chain
-  (``hilbert_sql_cte``) — both on int64 with identical masking;
+* the Hilbert bit-algebra (packedrtree.cpp:74-131) runs as the numpy
+  kernel (gdal_spark.kernels.hilbert.hilbert_u32) on the Spark side
+  and as a DuckDB CTE chain (``hilbert_sql_cte``) on the oracle side,
+  with identical masking;
 * polygon rings/attrs come from the deterministic fixture
   (gdal_spark.sources.fixtures) and are embedded into the oracle SQL
   as VALUES lists.
@@ -81,8 +81,8 @@ def hilbert_sql_cte(src_cte: str) -> str:
     """CTE chain computing hkey from ``{src_cte}(doc_id, hx, hy)``.
 
     Produces a CTE named ``hfin(doc_id, hkey)``.  Same bit algebra as
-    kernels.hilbert.hilbert_u32 / functions.hilbert_u32_col; all
-    values stay < 2^32 on BIGINTs given 16-bit inputs.
+    kernels.hilbert.hilbert_u32; all values stay < 2^32 on BIGINTs
+    given 16-bit inputs.
     """
     M = 65535
     return f"""

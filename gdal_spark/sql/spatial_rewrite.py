@@ -27,7 +27,7 @@ plain Spark plan, which stays correct):
   one join and both ST_Intersects arguments qualified by the two
   FROM names;
 * one side is a POINT layer carrying double columns ``x, y`` (the
-  engine's point contract, operators/spatial_join.py:133) and the
+  engine's point contract, ``operators.spatial_join``) and the
   other a polygon layer carrying ``fid, wkb, xmin, ymin, xmax,
   ymax``;
 * the join grid is derived from the polygon layer's bbox columns —

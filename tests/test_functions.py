@@ -7,7 +7,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from gdal_spark import functions as gf
-from gdal_spark.kernels import cells, hilbert
+from gdal_spark.kernels import cells
 from gdal_spark.sources.fixtures import POLY_BBOX
 
 
@@ -27,40 +27,6 @@ def test_cell_col_matches_kernel(spark):
     # collect preserves row order for a local createDataFrame -> select
     want = cells.cell_of_point(grid, z, pdf["x"].to_numpy(), pdf["y"].to_numpy())
     assert sorted(got.tolist()) == sorted(want.tolist())
-
-
-def test_hilbert_col_matches_kernel(spark):
-    rng = np.random.RandomState(7)
-    n = 2000
-    pdf = pd.DataFrame({
-        "gx": rng.randint(0, 1 << 16, n).astype(np.int64),
-        "gy": rng.randint(0, 1 << 16, n).astype(np.int64),
-    })
-    df = spark.createDataFrame(pdf).withColumn(
-        "h", gf.hilbert_u32_col(F.col("gx"), F.col("gy")))
-    got = {(r["gx"], r["gy"]): r["h"] for r in df.collect()}
-    want = hilbert.hilbert_u32(pdf["gx"].to_numpy().astype(np.uint32),
-                               pdf["gy"].to_numpy().astype(np.uint32))
-    for (gx, gy), w in zip(zip(pdf["gx"], pdf["gy"]), want):
-        assert got[(gx, gy)] == int(w)
-
-
-def test_hilbert_key_col_matches_kernel(spark):
-    rng = np.random.RandomState(3)
-    minx, miny, maxx, maxy = POLY_BBOX
-    n = 1000
-    pdf = pd.DataFrame({
-        "x": rng.uniform(minx, maxx, n),
-        "y": rng.uniform(miny, maxy, n),
-    })
-    w, h = maxx - minx, maxy - miny
-    df = spark.createDataFrame(pdf).withColumn(
-        "hk", gf.hilbert_key_col(F.col("x"), F.col("y"), minx, miny, w, h))
-    got = {(r["x"], r["y"]): r["hk"] for r in df.collect()}
-    want = hilbert.hilbert_of_xy_f64(pdf["x"].to_numpy(), pdf["y"].to_numpy(),
-                                     minx, miny, w, h)
-    for (x, y), wv in zip(zip(pdf["x"], pdf["y"]), want):
-        assert got[(x, y)] == int(wv)
 
 
 def test_covering_cells_col_matches_kernel(spark):

@@ -133,13 +133,48 @@ def test_auto_salt_and_broadcast_agree(spark):
     assert a == b and len(a) > 0
 
 
-def test_exact_pandas_path_matches_column(data):
-    """The cogrouped Arrow exact phase (bit-match demo path) must
-    produce the same pairs as the JVM aggregate() path."""
-    docs, polys, grid, pts, want = data
-    joined = spatial_join(extract_geo_points(docs), polys, grid, zoom=6,
-                          exact="pandas")
-    assert _got_pairs(joined) == want
+def test_pip_inside_col_matches_kernel(spark):
+    """The JVM edge fold must decide exactly like the numpy ray cast
+    (kernels/pip.points_in_polygon): rings with holes, points on ring
+    vertices, points on and along horizontal edges, random points."""
+    import pandas as pd
+
+    from gdal_spark import functions as gf
+    from gdal_spark.operators.spatial_join import edges_table
+
+    rng = np.random.RandomState(11)
+    square = np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], float)
+    hole = np.array([[3, 3], [3, 7], [7, 7], [7, 3], [3, 3]], float)
+    steps = np.array([[0, 0], [4, 0], [4, 2], [8, 2], [8, 6], [2, 6],
+                      [2, 4], [0, 4], [0, 0]], float)
+    wobble = np.array(fx.polygons_pandas()["wkb"].map(
+        lambda b: kwkb.polygon_rings(bytes(b))[0]).iloc[3], float)
+    polys = {0: [square, hole], 1: [steps], 2: [square, hole[::-1]],
+             3: [wobble]}
+
+    rows, want = [], []
+    for fid, rings in polys.items():
+        verts = np.concatenate(rings)
+        lo, hi = verts.min(axis=0), verts.max(axis=0)
+        horiz = [(a + b) / 2 for r in rings for a, b in zip(r[:-1], r[1:])
+                 if a[1] == b[1]]
+        along = [(x, v[1]) for v in verts
+                 for x in (lo[0] - 1.0, (lo[0] + hi[0]) / 2, hi[0] + 1.0)]
+        rand = rng.uniform(lo - 1.0, hi + 1.0, (300, 2))
+        pts = np.concatenate([verts, np.array(horiz).reshape(-1, 2),
+                              np.array(along), rand])
+        inside = kpip.points_in_polygon(pts[:, 0], pts[:, 1], rings)
+        rows += [(fid, i, float(x), float(y)) for i, (x, y) in enumerate(pts)]
+        want += [(fid, i, bool(v)) for i, v in enumerate(inside)]
+    assert 0 < sum(v for *_, v in want) < len(want)
+
+    edges = edges_table(spark.createDataFrame(pd.DataFrame({
+        "fid": list(polys), "wkb": [kwkb.wkb_polygon(r) for r in polys.values()]})))
+    got = (spark.createDataFrame(rows, "fid long, i long, x double, y double")
+           .join(edges, "fid")
+           .select("fid", "i", gf.pip_inside_col(F.col("edges"), F.col("x"),
+                                                 F.col("y")).alias("inside")))
+    assert sorted(tuple(r) for r in got.collect()) == sorted(want)
 
 
 def test_prepare_edges_reused_across_calls(data):
@@ -216,3 +251,115 @@ def test_s2_join_parity_with_quadtree(spark):
                    spatial_join(pts, polys, grid, zoom=5,
                                 first_match=True).collect())
     assert s2_fm == qt_fm
+
+
+# ------------------------------------------------------ input-shape matrix
+# The fixture layer affine-mapped to lon/lat degrees, so one frame serves
+# both key schemes, plus one ring-with-hole polygon (fid 10) overlapping
+# five fixture polygons, so a point can lie in two polygons.
+SHAPE_N = 1500
+SHAPE_GRID = TileGrid.local(-1.2, -1.0, 1.2, 1.0, tile_size=256)
+_MINX, _MINY, _MAXX, _MAXY = fx.POLY_BBOX
+_CX, _CY = (_MINX + _MAXX) / 2.0, (_MINY + _MAXY) / 2.0
+_S = 2.0 / (_MAXX - _MINX)
+_OVERLAP = [np.array([[-0.6, -0.5], [0.6, -0.5], [0.6, 0.5], [-0.6, 0.5],
+                      [-0.6, -0.5]]),
+            np.array([[-0.2, -0.2], [-0.2, 0.2], [0.2, 0.2], [0.2, -0.2],
+                      [-0.2, -0.2]])]
+
+
+@pytest.fixture(scope="module")
+def shape_polys(spark):
+    import pandas as pd
+
+    pdf = fx.polygons_pandas()
+    rings = [[(np.asarray(r, float) - (_CX, _CY)) * _S
+              for r in kwkb.polygon_rings(bytes(b))] for b in pdf["wkb"]]
+    rings.append(_OVERLAP)
+    pdf = pd.concat([pdf, pdf.iloc[:1].assign(fid=10, eas_id=999)],
+                    ignore_index=True)
+    pdf["wkb"] = [kwkb.wkb_polygon(r) for r in rings]
+    for c, agg, k in (("xmin", min, 0), ("ymin", min, 1),
+                      ("xmax", max, 0), ("ymax", max, 1)):
+        pdf[c] = [float(agg(r[0][:, k])) for r in rings]
+    return spark.createDataFrame(pdf), pdf, rings
+
+
+def _shape_points(spark, shape, tmp_path):
+    """Points of one input shape.  All shapes start from spark.range, so
+    the x, y values are the same doubles in every frame."""
+    from gdal_spark.queries import _derive as dv
+
+    rid = F.col("id")
+    if shape == "xy_only":
+        rid = rid % (SHAPE_N - 100)       # 100 duplicated rows, no key
+    x, y = dv.point_cols(rid)
+    x, y = ((x - _CX) * _S).alias("x"), ((y - _CY) * _S).alias("y")
+    if shape == "xy_only":
+        cols = [x, y]
+    elif shape == "dup_lead":
+        cols = [(F.col("id") % 7).alias("tag"), F.col("id").alias("doc_id"), x, y]
+    else:
+        cols = [F.col("id").alias("doc_id"), x, y]
+    pts = spark.range(SHAPE_N).select(*cols)
+    if shape == "parquet":
+        pts.write.parquet(str(tmp_path / "pts"))
+        pts = spark.read.parquet(str(tmp_path / "pts"))
+    elif shape == "persisted":
+        pts = pts.persist()
+    elif shape == "memory":
+        pts = spark.createDataFrame(pts.toPandas())
+    return pts
+
+
+@pytest.mark.parametrize("shape,key,broadcast,salt", [
+    ("range", "quadtree", None, 0),
+    ("range", "quadtree", False, "auto"),
+    ("range", "s2", True, 0),
+    ("parquet", "quadtree", False, 4),
+    ("parquet", "s2", None, 0),
+    ("persisted", "quadtree", True, 4),
+    ("persisted", "s2", False, 0),
+    ("memory", "quadtree", None, "auto"),
+    ("xy_only", "quadtree", False, 4),
+    ("xy_only", "s2", None, 0),
+    ("dup_lead", "quadtree", True, 0),
+    ("dup_lead", "s2", False, 0),
+])
+def test_input_shape_matrix(spark, shape_polys, tmp_path, shape, key,
+                            broadcast, salt):
+    """Every point-frame shape gets the brute-force result: exact
+    (point row, fid) pairs for the inner join, one row per matched
+    point row for first_match, and for how='left' the matches plus
+    each unmatched row once with null polygon columns."""
+    from collections import Counter
+
+    from gdal_spark.operators.spatial_join import spatial_join_s2
+
+    polys, pdf, rings = shape_polys
+    pts = _shape_points(spark, shape, tmp_path)
+    cols = pts.columns
+    rows = [tuple(r) for r in pts.collect()]
+    xs = np.array([r[cols.index("x")] for r in rows])
+    ys = np.array([r[cols.index("y")] for r in rows])
+    hits = [[] for _ in rows]
+    for fid, rr in zip(pdf["fid"], rings):
+        for i in np.flatnonzero(kpip.points_in_polygon(xs, ys, rr)):
+            hits[i].append(int(fid))
+    eas = dict(zip(pdf["fid"], pdf["eas_id"]))
+    assert sum(len(h) > 1 for h in hits) > 0 and sum(not h for h in hits) > 0
+
+    def join(**kw):
+        if key == "s2":
+            out = spatial_join_s2(pts, polys, level=8, broadcast=broadcast, **kw)
+        else:
+            out = spatial_join(pts, polys, SHAPE_GRID, zoom=5,
+                               broadcast=broadcast, salt=salt, **kw)
+        return Counter(tuple(r) for r in out.select(*cols, "fid", "eas_id").collect())
+
+    inner = Counter(r + (f, eas[f]) for r, h in zip(rows, hits) for f in h)
+    first = Counter(r + (min(h), eas[min(h)]) for r, h in zip(rows, hits) if h)
+    left = inner + Counter(r + (None, None) for r, h in zip(rows, hits) if not h)
+    assert join() == inner
+    assert join(first_match=True) == first
+    assert join(how="left") == left
